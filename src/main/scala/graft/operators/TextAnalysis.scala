@@ -798,9 +798,11 @@ object TextAnalysis {
     val pairs = Tables.documents(s, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("c"))
-    // corpus size: driver scalar at plan-build (same footing as tfidf's N)
+    // corpus size: driver scalar at plan-build (same footing as tfidf's N);
+    // a NULL text explodes to no terms, so it counts 0 — not size()'s −1
+    // (or NULL under ANSI)
     val t = Tables.documents(s, dir)
-      .select(size(split(col("text"), " ")).cast("long").as("n"))
+      .select(greatest(size(split(col("text"), " ")), lit(0)).cast("long").as("n"))
       .agg(sum("n")).collect()(0).getLong(0)
     val wTerm = org.apache.spark.sql.expressions.Window.partitionBy("term")
     pairs

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Snapshot / time-travel table layer over plain parquet — the Iceberg
   * table-format semantics the reference's DDL declares
@@ -42,10 +42,12 @@ import org.apache.spark.sql.types.StructType
   *     `_metadata.file_path` lineage column), not the table — and a
   *     MERGE-ON-READ alternative (`deleteWhereMor`) that commits
   *     position-delete files and rewrites nothing;
-  *   - schema evolution: a commit may add columns; snapshot reads merge
-  *     file schemas, old snapshots keep their old shape;
+  *   - schema evolution: a commit may add columns; the manifest records
+  *     the evolved schema, old snapshots keep their old shape;
   *   - manifest-pinned scans: planning reads one manifest, not a
-  *     recursive directory listing over millions of files.
+  *     recursive directory listing over millions of files — and the
+  *     manifest pins the schema too, so opening a snapshot reads no
+  *     parquet footer and starts no Spark job.
   *
   * Manifests are line-oriented key=value text (no JSON library in the
   * offline build): `version/op/nRows/schema` headers + one `file=` line
@@ -490,15 +492,6 @@ object SnapshotLake {
       }.toSeq: _*)
     }
 
-  /** Stage a DataFrame's rows as immutable data files for version `v`;
-    * returns root-relative paths. The write lands in a scratch dir, then
-    * each part renames into `data/` — readers never list a half-written
-    * directory because readers never list at all (manifests pin files). */
-  private def stage(df: DataFrame, root: String, v: Int,
-                    statsCol: Option[String],
-                    cols: Seq[ColumnDef] = Seq.empty): Seq[FileEntry] =
-    stageAs(df, root, v, offset = 0, statsCol, cols)
-
   /** Per-stage nonce folded into every staged file name: with branch
     * commits, two writers can stage under the SAME guessed version
     * number (each computed its own head) — without a uniquifier the
@@ -509,13 +502,19 @@ object SnapshotLake {
     java.lang.Long.toHexString(
       java.util.concurrent.ThreadLocalRandom.current().nextLong() >>> 40)
 
-  private def stageAs(df0: DataFrame, root: String, v: Int, offset: Int,
-                      statsCol: Option[String],
-                      cols: Seq[ColumnDef] = Seq.empty): Seq[FileEntry] = {
+  /** Stage a DataFrame's rows as immutable data files for version `v`;
+    * returns their manifest entries. The write lands in a scratch dir,
+    * then each part renames into `data/` — readers never list a
+    * half-written directory because readers never list at all (manifests
+    * pin files). `tag` marks delete files in their names
+    * (`data/v{N}-{nonce}-del-{i}.parquet`). */
+  private def stage(df0: DataFrame, root: String, v: Int,
+                    statsCol: Option[String], cols: Seq[ColumnDef] = Seq.empty,
+                    tag: String = ""): Seq[FileEntry] = {
     val nonce = stageNonce()
     val df = withFieldIds(df0, cols)
     if (cols.nonEmpty) ensureFieldIdConfs(df.sparkSession)
-    val scratch = Paths.get(root, s".stage-v$v-$nonce-$offset")
+    val scratch = Paths.get(root, s".stage-v$v-$nonce")
     df.write.mode("overwrite").parquet(scratch.toString)
     Files.createDirectories(dataDir(root))
     // the writer emits a part file per task INCLUDING empty partitions;
@@ -532,35 +531,9 @@ object SnapshotLake {
       finally s.close()
     }
     val named = parts.zipWithIndex.map { case ((p, (rows, pairs, nulls)), i) =>
-      val rel = s"data/v$v-$nonce-${offset + i}.parquet"
+      val rel = s"data/v$v-$nonce-$tag$i.parquet"
       Files.move(p, Paths.get(root, rel), StandardCopyOption.ATOMIC_MOVE)
       entryOf(rel, rows, pairs, nulls)
-    }
-    deleteRecursively(scratch)
-    named
-  }
-
-  /** Stage a (df, pos) position-delete frame as `data/v{N}-del-{i}
-    * .parquet`. A delete set is tiny next to the data it tombstones, so
-    * it lands as one file; zero-row stages publish nothing. */
-  private def stageDeletes(dels: DataFrame, root: String, v: Int,
-                           offset: Int, tag: String = "del"): Seq[FileEntry] = {
-    val nonce = stageNonce()
-    val scratch = Paths.get(root, s".stage-v$v-$nonce-$tag")
-    dels.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-    Files.createDirectories(dataDir(root))
-    val parts = {
-      val s = Files.list(scratch)
-      try s.iterator().asScala.filter(_.toString.endsWith(".parquet"))
-        .toSeq.sortBy(_.getFileName.toString)
-        .map(p => (p, footerStats(p, None)._1))
-        .filter(_._2 > 0)
-      finally s.close()
-    }
-    val named = parts.zipWithIndex.map { case ((p, rows), i) =>
-      val rel = s"data/v$v-$nonce-$tag-${offset + i}.parquet"
-      Files.move(p, Paths.get(root, rel), StandardCopyOption.ATOMIC_MOVE)
-      FileEntry(rel, rows, None, None)
     }
     deleteRecursively(scratch)
     named
@@ -643,8 +616,9 @@ object SnapshotLake {
     * id is never reused, so a column dropped and re-added under the same
     * name cannot resurface old data. `maxEverId` must be the max over
     * ALL history (not just live columns), tracked as the running max so
-    * drops don't free ids. */
-  private def evolvedCols(cols: Seq[ColumnDef], maxEverId: Int,
+    * drops don't free ids; it is by-name because only id-based tables
+    * need it, and computing it parses every retained manifest. */
+  private def evolvedCols(cols: Seq[ColumnDef], maxEverId: => Int,
                           next: StructType): Seq[ColumnDef] =
     if (cols.isEmpty) Seq.empty
     else {
@@ -660,10 +634,16 @@ object SnapshotLake {
     * the assigning snapshot; the running max over retained manifests is
     * the conservative floor). */
   private def maxEverId(root: String, cur: Int): Int =
-    (1 to cur).flatMap { v =>
-      try snapshot(root, v).cols.map(_.id)
-      catch { case _: Exception => Seq.empty }
-    }.foldLeft(0)(math.max)
+    retainedSnapshots(root, 1 to cur).flatMap(_.cols.map(_.id))
+      .foldLeft(0)(math.max)
+
+  /** The snapshots among `versions` whose manifests still parse — the
+    * rest were expired (or never published). */
+  private def retainedSnapshots(root: String,
+                                versions: Seq[Int]): Seq[Snapshot] =
+    versions.flatMap { v =>
+      try Some(snapshot(root, v)) catch { case _: Exception => None }
+    }
 
   /** Create the table (version 1). `statsCol` names an integral column
     * whose per-file min/max every commit records in its manifest — the
@@ -687,9 +667,9 @@ object SnapshotLake {
   }
 
   /** Append-only commit: previous files all carry over, the batch's files
-    * add on. The batch may ADD columns (schema evolution) — snapshot
-    * reads merge file schemas (by field id on id-based tables) and older
-    * snapshots keep their shape. */
+    * add on. The batch may ADD columns (schema evolution) — the manifest
+    * records the evolved schema (ids on id-based tables), older rows read
+    * them as null and older snapshots keep their shape. */
   def append(spark: SparkSession, df: DataFrame, root: String): Int = {
     val (prev, snap, claim) = mainMutationCtx(root)
     val cols = evolvedCols(snap.cols, maxEverId(root, prev), df.schema)
@@ -878,12 +858,7 @@ object SnapshotLake {
     // exact bytes that publish — never from re-executing the incoming
     // plan, which costs a second scan and could be nondeterministic
     val n = staged.map(_.rows).sum
-    val stagedDf =
-      if (staged.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], df.schema)
-      else spark.read
-        .parquet(staged.map(f => Paths.get(root, f.path).toString): _*)
-    val violations = audit(stagedDf)
+    val violations = audit(readFiles(spark, root, byName(df.schema), staged))
     if (violations.nonEmpty) {
       staged.foreach(f => Files.deleteIfExists(Paths.get(root, f.path)))
       Left(violations)
@@ -896,9 +871,6 @@ object SnapshotLake {
     }
   }
 
-  /** The VISIBLE rows of `files` (pending position deletes subtracted)
-    * with the `_df`/`_pos` lineage columns still attached — the shared
-    * front half of every row-level write path. */
   /** Data-file commit version parsed from the `_df` lineage basename
     * (`v{N}-{i}.parquet`) — the sequence number equality deletes compare
     * against. */
@@ -914,21 +886,23 @@ object SnapshotLake {
   private def subtractEqDeletes(spark: SparkSession, root: String,
                                 snap: Snapshot, df0: DataFrame): DataFrame =
     snap.eqDeletes.foldLeft(df0) { (df, e) =>
-      val keys = spark.read
-        .parquet(Paths.get(root, e.file.path).toString)
+      val keys = eqDeleteKeys(spark, root, snap, e)
         .toDF(e.keyCols.map(c => s"__eq_$c"): _*)
       val cond = e.keyCols.map(c => df(c) === keys(s"__eq_$c"))
         .reduce(_ && _) && (fileVersionExpr <= lit(e.version))
       df.join(broadcast(keys), cond, "left_anti")
     }
 
+  /** The VISIBLE rows of `files` (pending position and equality deletes
+    * subtracted) with the `_df`/`_pos` lineage columns still attached —
+    * the shared front half of every row-level write path. */
   private def openVisible(spark: SparkSession, root: String, snap: Snapshot,
                           files: Seq[FileEntry]): DataFrame = {
     val raw = openRaw(spark, root, snap, files)
     val posFree =
       if (snap.deletes.isEmpty) raw
       else {
-        val dels = deleteEntries(spark, root, snap)
+        val dels = deleteEntries(spark, root, snap.deletes)
         raw.join(dels,
           col("_df") === dels("df") && col("_pos") === dels("pos"),
           "left_anti")
@@ -936,16 +910,22 @@ object SnapshotLake {
     subtractEqDeletes(spark, root, snap, posFree)
   }
 
-  /** Basenames of every data file a pending delete entry references —
-    * the files a COW op must also rewrite (entries live mixed inside
-    * delete parquet files, so per-file entry filtering would mean
-    * rewriting the delete files; COW ops instead materialize ALL pending
-    * deletes and leave a delete-free snapshot). */
-  private def deleteReferencedNames(spark: SparkSession, root: String,
-                                    snap: Snapshot): Set[String] =
-    if (snap.deletes.isEmpty) Set.empty
-    else deleteEntries(spark, root, snap).select("df").distinct()
-      .collect().map(_.getString(0)).toSet
+  /** The one Spark action a copy-on-write commit runs before it
+    * rewrites: data-file basename → visible `hits` rows in that file.
+    * Files a pending position delete references are included with 0
+    * hits: entries live mixed inside delete files, so COW ops fold ALL
+    * pending deletes in and leave a delete-free snapshot. The keys are
+    * the files to rewrite; the values sum to the rows removed. */
+  private def census(spark: SparkSession, root: String, snap: Snapshot,
+                     hits: Option[DataFrame]): Map[String, Long] = {
+    val marks = hits.map(_.select(col("_df"), lit(1L).as("n"))).toSeq ++
+      Option.when(snap.deletes.nonEmpty)(
+        deleteEntries(spark, root, snap.deletes)
+          .select(col("df").as("_df"), lit(0L).as("n")))
+    if (marks.isEmpty) Map.empty
+    else marks.reduce(_ unionByName _).groupBy("_df").agg(sum("n"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+  }
 
   private def baseName(p: String): String = p.split('/').last
 
@@ -959,21 +939,20 @@ object SnapshotLake {
   def deleteWhere(spark: SparkSession, root: String, cond: Column): (Int, Long) = {
     val (prev, snap, claim) = mainMutationCtx(root)
     if (snap.files.isEmpty) return (prev, 0L)
-    val visible = openVisible(spark, root, snap, snap.files)
-    val condHit = visible.filter(cond).select("_df").distinct()
-      .collect().map(_.getString(0)).toSet
-    if (condHit.isEmpty) (prev, 0L)
+    val hits = census(spark, root, snap,
+      Some(openVisible(spark, root, snap, snap.files).filter(cond)))
+    val nDeleted = hits.values.sum
+    if (nDeleted == 0) (prev, 0L)
     else {
-      val hitNames = condHit ++ deleteReferencedNames(spark, root, snap)
-      val hitEntries = snap.files.filter(f => hitNames(baseName(f.path)))
-      val touched = openVisible(spark, root, snap, hitEntries)
-      val survivors = touched.filter(!cond).drop("_df", "_pos")
-      val nDeleted = touched.count() - survivors.count()
-      val newFiles = if (survivors.isEmpty) Seq.empty[FileEntry]
-                     else stage(survivors, root, claim, snap.statsCol,
-                       snap.cols)
+      val hitNames = hits.keySet
+      // a row whose `cond` is NULL is not deleted — it survives here just
+      // as it does in untouched files and under deleteWhereMor
+      val survivors = openVisible(spark, root, snap,
+        snap.files.filter(f => hitNames(baseName(f.path))))
+        .filter(not(coalesce(cond, lit(false)))).drop("_df", "_pos")
+      // stage drops zero-row parts, so an all-deleted rewrite adds no file
       val files = snap.files.filterNot(f => hitNames(baseName(f.path))) ++
-        newFiles
+        stage(survivors, root, claim, snap.statsCol, snap.cols)
       val v = commit(root, prev, "delete", snap.nRows - nDeleted,
         snap.schemaDdl, snap.statsCol, files, Seq.empty, snap.cols,
         snap.eqDeletes, claim = claim)
@@ -1002,9 +981,9 @@ object SnapshotLake {
     val newDels = openVisible(spark, root, snap, snap.files)
       .filter(cond)
       .select(col("_df").as("df"), col("_pos").as("pos"))
-      .orderBy("df", "pos")
-    val staged = stageDeletes(newDels, root, claim,
-      offset = snap.deletes.size)
+      .repartition(1).sortWithinPartitions("df", "pos")
+    // a delete set is tiny next to the data it tombstones: one file
+    val staged = stage(newDels, root, claim, None, tag = "del-")
     val n = staged.map(_.rows).sum
     if (n == 0) (prev, 0L)
     else {
@@ -1024,14 +1003,12 @@ object SnapshotLake {
   def rewritePositionDeletes(spark: SparkSession, root: String): (Int, Int) = {
     val (prev, snap, claim) = mainMutationCtx(root)
     if (snap.deletes.isEmpty) return (prev, 0)
-    val hitNames = deleteReferencedNames(spark, root, snap)
+    val hitNames = census(spark, root, snap, None).keySet
     val hitEntries = snap.files.filter(f => hitNames(baseName(f.path)))
-    val survivors = openVisible(spark, root, snap, hitEntries)
-      .drop("_df", "_pos")
-    val newFiles = if (hitEntries.isEmpty || survivors.isEmpty)
-                     Seq.empty[FileEntry]
-                   else stage(survivors, root, claim, snap.statsCol,
-                     snap.cols)
+    val newFiles =
+      if (hitEntries.isEmpty) Seq.empty[FileEntry]
+      else stage(openVisible(spark, root, snap, hitEntries)
+        .drop("_df", "_pos"), root, claim, snap.statsCol, snap.cols)
     val files = snap.files.filterNot(f => hitNames(baseName(f.path))) ++
       newFiles
     val v = commit(root, prev, "rewrite_deletes", snap.nRows,
@@ -1061,12 +1038,16 @@ object SnapshotLake {
     val (prev, snap, claim) = mainMutationCtx(root)
     if (snap.files.isEmpty) return (prev, 0L)
     val keyCols = keys.columns.toSeq
-    val k = keys.distinct().cache()
+    // typed as the table's columns, so readers can name the key schema
+    // from the manifest alone (eqDeleteKeys)
+    val table = StructType.fromDDL(snap.schemaDdl)
+    val k = keys
+      .select(keyCols.map(c => col(c).cast(table(c).dataType).as(c)): _*)
+      .distinct().cache()
     val n = openVisible(spark, root, snap, snap.files)
       .join(k, keyCols, "left_semi").count()
     if (n == 0) { k.unpersist(); return (prev, 0L) }
-    val staged = stageDeletes(k, root, claim,
-      offset = snap.eqDeletes.size, tag = "eqdel")
+    val staged = stage(k.coalesce(1), root, claim, None, tag = "eqdel-")
     k.unpersist()
     val v = commit(root, prev, "delete[eqmor]", snap.nRows - n,
       snap.schemaDdl, snap.statsCol, snap.files, snap.deletes, snap.cols,
@@ -1108,8 +1089,7 @@ object SnapshotLake {
         case "delete[mor]" =>
           val prevDels = prevS.deletes.toSet
           val newDels = cur.deletes.filterNot(prevDels)
-          val entries = spark.read.parquet(
-            newDels.map(f => Paths.get(root, f.path).toString): _*)
+          val entries = deleteEntries(spark, root, newDels)
           // tombstoned rows were VISIBLE at v-1; positions name them exactly
           tag(openRaw(spark, root, prevS, prevS.files)
             .join(entries,
@@ -1120,8 +1100,7 @@ object SnapshotLake {
           val prevEq = prevS.eqDeletes.toSet
           val newEq = cur.eqDeletes.filterNot(prevEq)
           newEq.map { e =>
-            val keys = spark.read
-              .parquet(Paths.get(root, e.file.path).toString)
+            val keys = eqDeleteKeys(spark, root, cur, e)
             tag(openVisible(spark, root, prevS, prevS.files)
               .join(broadcast(keys), e.keyCols, "left_semi")
               .drop("_df", "_pos"), "delete")
@@ -1144,40 +1123,35 @@ object SnapshotLake {
   def merge(spark: SparkSession, root: String, updates: DataFrame,
             key: String): (Int, Long, Long) = {
     val (prev, snap, claim) = mainMutationCtx(root)
-    val up = updates.cache()
-    val nUp = up.count()
-    val cols = evolvedCols(snap.cols, maxEverId(root, prev), up.schema)
+    val cols = evolvedCols(snap.cols, maxEverId(root, prev), updates.schema)
+    // the update rows stage FIRST: their footers count them, and the
+    // staged bytes — not a re-execution of `updates` — supply the keys
+    // the census and the rewrite both match on
+    val upFiles = stage(updates, root, claim, snap.statsCol, cols)
+    val nUp = upFiles.map(_.rows).sum
+    val upKeys = readFiles(spark, root,
+      byName(StructType(Seq(updates.schema(key)))), upFiles)
     val visible = openVisible(spark, root, snap, snap.files)
-    val keyHit = visible.join(up.select(key), Seq(key), "left_semi")
-      .select("_df").distinct()
-      .collect().map(_.getString(0)).toSet
-    // COW commits leave a delete-free snapshot: files a pending position
-    // delete references rewrite too (see deleteWhere)
-    val hitNames = keyHit ++ deleteReferencedNames(spark, root, snap)
-    val (survivorFiles, nUpdated) =
-      if (hitNames.isEmpty) (Seq.empty[FileEntry], 0L)
+    val hits = census(spark, root, snap,
+      Some(visible.join(upKeys, Seq(key), "left_semi")))
+    val nUpdated = hits.values.sum
+    val hitNames = hits.keySet
+    val survivorFiles =
+      if (hitNames.isEmpty) Seq.empty[FileEntry]
       else {
-        val hitEntries = snap.files.filter(f => hitNames(baseName(f.path)))
-        val touched = openVisible(spark, root, snap, hitEntries)
+        val touched = openVisible(spark, root, snap,
+          snap.files.filter(f => hitNames(baseName(f.path))))
           .drop("_df", "_pos")
-        val survivors = touched.join(up.select(key), Seq(key), "left_anti")
-        val nUpd = touched.count() - survivors.count()
-        val fs = if (survivors.isEmpty) Seq.empty[FileEntry]
-                 else stage(survivors, root, claim, snap.statsCol, cols)
-        (fs, nUpd)
+        stage(touched.join(upKeys, touched(key) === upKeys(key), "left_anti"),
+          root, claim, snap.statsCol, cols)
       }
-    // restaged survivors land as v{N}-{nonce}-{i}; the update rows stage
-    // into the same version with an offset suffix so names stay unique
-    val upFiles = stageAs(up, root, claim, survivorFiles.size,
-      snap.statsCol, cols)
     val files = snap.files.filterNot(f => hitNames(baseName(f.path))) ++
       survivorFiles ++ upFiles
     val schema = if (snap.idBased) ddlOf(cols)
-                 else mergedDdl(snap.schemaDdl, up.schema)
+                 else mergedDdl(snap.schemaDdl, updates.schema)
     val v = commit(root, prev, "merge", snap.nRows - nUpdated + nUp,
       schema, snap.statsCol, files, Seq.empty, cols, snap.eqDeletes,
       claim = claim)
-    up.unpersist()
     (v, nUpdated, nUp - nUpdated)
   }
 
@@ -1197,15 +1171,32 @@ object SnapshotLake {
   private def open(spark: SparkSession, root: String, snap: Snapshot): DataFrame =
     openFiles(spark, root, snap, snap.files)
 
-  /** The logical-schema scan of `files`: name-resolved with mergeSchema
-    * for classic tables; for id-based tables, an EXPLICIT schema built
-    * from the snapshot's [[ColumnDef]]s with `parquet.field.id` metadata
-    * — Spark's parquet reader then matches file columns by id, which is
-    * what makes renames read old files correctly and keeps dropped ids
-    * invisible. */
+  /** `files` read with an EXPLICIT schema — no footer inference, so
+    * building the frame starts no Spark job. Spark makes every requested
+    * column nullable and widens narrower parquet integers. */
+  private def readFiles(spark: SparkSession, root: String,
+                        schema: StructType, files: Seq[FileEntry]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.schema(schema)
+      .parquet(files.map(f => Paths.get(root, f.path).toString): _*)
+
+  /** `st` without field metadata: a requested column that carries a
+    * `parquet.field.id` matches file columns by id, so schemas borrowed
+    * from a frame are stripped to match by name. */
+  private def byName(st: StructType): StructType =
+    StructType(st.fields.map(f => StructField(f.name, f.dataType)))
+
+  /** The logical-schema scan of `files`, with the schema the manifest
+    * pins. Name-resolved tables read with the `schema=` DDL — every
+    * commit records the evolved (added-column) schema there, so it is
+    * the merge of the file schemas without opening a footer. Id-based
+    * tables read with the snapshot's [[ColumnDef]]s plus
+    * `parquet.field.id` metadata — Spark's parquet reader then matches
+    * file columns by id, which is what makes renames read old files
+    * correctly and keeps dropped ids invisible. */
   private def scanFiles(spark: SparkSession, root: String, snap: Snapshot,
-                        files: Seq[FileEntry]): DataFrame = {
-    val paths = files.map(f => Paths.get(root, f.path).toString)
+                        files: Seq[FileEntry]): DataFrame =
     if (snap.idBased) {
       ensureFieldIdConfs(spark)
       val base = StructType.fromDDL(ddlOf(snap.cols))
@@ -1215,10 +1206,9 @@ object SnapshotLake {
             .withMetadata(f.metadata)
             .putLong("parquet.field.id", c.id.toLong).build())
       })
-      spark.read.schema(withIds).parquet(paths: _*)
+      readFiles(spark, root, withIds, files)
     } else
-      spark.read.option("mergeSchema", "true").parquet(paths: _*)
-  }
+      readFiles(spark, root, StructType.fromDDL(snap.schemaDdl), files)
 
   /** Data rows of `files` with LINEAGE columns attached: `_df` = data-file
     * basename (unique within a table: `v{N}-{i}.parquet`), `_pos` = row
@@ -1234,10 +1224,23 @@ object SnapshotLake {
         element_at(split(col("_metadata.file_path"), "/"), -1).as("_df"),
         col("_metadata.row_index").as("_pos"))
 
-  /** All position-delete entries of a snapshot as one (df, pos) frame. */
+  /** The fixed schema of a position-delete file. */
+  private val DeleteSchema = StructType.fromDDL("df STRING, pos BIGINT")
+
+  /** Position-delete entries of `dels` as one (df, pos) frame. */
   private def deleteEntries(spark: SparkSession, root: String,
-                            snap: Snapshot): DataFrame =
-    spark.read.parquet(snap.deletes.map(f => Paths.get(root, f.path).toString): _*)
+                            dels: Seq[FileEntry]): DataFrame =
+    readFiles(spark, root, DeleteSchema, dels)
+
+  /** The key values of equality-delete `e`, typed as the key columns of
+    * `snap` (deleteWhereMorEq stages them cast to those types). */
+  private def eqDeleteKeys(spark: SparkSession, root: String, snap: Snapshot,
+                           e: EqDelete): DataFrame = {
+    val table = StructType.fromDDL(snap.schemaDdl)
+    readFiles(spark, root,
+      StructType(e.keyCols.map(c => StructField(c, table(c).dataType))),
+      Seq(e.file))
+  }
 
   private def openFiles(spark: SparkSession, root: String, snap: Snapshot,
                         files: Seq[FileEntry]): DataFrame =
@@ -1378,9 +1381,8 @@ object SnapshotLake {
     * n_rows, n_files`), read from manifests only. */
   def history(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    (1 to currentVersion(root)).flatMap { v =>
-      try Some(snapshot(root, v)) catch { case _: Exception => None }
-    }.map(s => (s.version, s.op, s.nRows, s.files.length))
+    retainedSnapshots(root, 1 to currentVersion(root))
+      .map(s => (s.version, s.op, s.nRows, s.files.length))
       .toDF("version", "op", "n_rows", "n_files")
   }
 
@@ -1398,10 +1400,8 @@ object SnapshotLake {
     // self-contained full file lists, so pinning the manifest alone keeps
     // the snapshot reconstructable (Iceberg's ref-retention rule)
     val pinned = (listRefs(root).map(_._3) :+ mainVersion(root)).toSet
-    val retained = ((keepFrom to cur) ++ pinned).distinct.flatMap { v =>
-      try Some(snapshot(root, v)) catch { case _: Exception => None }
-    }
-    val live = retained.flatMap(_.allPaths).toSet
+    val live = retainedSnapshots(root, ((keepFrom to cur) ++ pinned).distinct)
+      .flatMap(_.allPaths).toSet
     var droppedManifests = 0
     var droppedFiles = 0
     (1 until keepFrom).filterNot(pinned).foreach { v =>
@@ -1417,9 +1417,8 @@ object SnapshotLake {
     }
     // files may also be orphaned by dead manifests already gone; sweep
     // data/ against the union of ALL remaining manifests
-    val stillReferenced = (1 to cur).flatMap { v =>
-      try snapshot(root, v).allPaths catch { case _: Exception => Seq.empty }
-    }.toSet
+    val remaining = retainedSnapshots(root, 1 to cur)
+    val stillReferenced = remaining.flatMap(_.allPaths).toSet
     val d = dataDir(root)
     if (Files.isDirectory(d)) {
       val s = Files.list(d)
@@ -1445,10 +1444,7 @@ object SnapshotLake {
     // also sweeps orphans from lost commit races, whose manifest link
     // never published). Not counted in droppedFiles — the return contract
     // counts data files, segments are metadata.
-    val liveSegs = (1 to cur).flatMap { v =>
-      try snapshot(root, v).segments.map(_.name)
-      catch { case _: Exception => Seq.empty }
-    }.toSet
+    val liveSegs = remaining.flatMap(_.segments.map(_.name)).toSet
     val m = metaDir(root)
     if (Files.isDirectory(m)) {
       val s = Files.list(m)
@@ -1640,11 +1636,15 @@ object SnapshotLake {
           "segments commute with main's history")
     }
     val forkPaths = snapshot(root, fork).paths.toSet
-    val added = snapshot(root, head).files.filterNot(f => forkPaths(f.path))
+    val hsnap = snapshot(root, head)
+    val added = hsnap.files.filterNot(f => forkPaths(f.path))
     val msnap = snapshot(root, m)
     val claim = currentVersion(root) + 1
+    // the replayed files may carry columns the branch added
+    val schema = if (msnap.idBased) msnap.schemaDdl
+                 else mergedDdl(msnap.schemaDdl, StructType.fromDDL(hsnap.schemaDdl))
     val v = commit(root, m, s"rebase[branch=$name,from=v$fork]",
-      msnap.nRows + added.map(_.rows).sum, msnap.schemaDdl, msnap.statsCol,
+      msnap.nRows + added.map(_.rows).sum, schema, msnap.statsCol,
       msnap.files ++ added, msnap.deletes, msnap.cols, msnap.eqDeletes,
       advanceMain = false, claim = claim)
     writeRef(root, name, "branch", v, replace = true)
@@ -1663,23 +1663,18 @@ object SnapshotLake {
   def appendBatchOnce(batch: DataFrame, root: String, batchId: Long): Boolean = {
     val cur = currentVersion(root)
     val opTag = s"append[batch=$batchId]"
-    val replay = (1 to cur).exists { v =>
-      (try Some(snapshot(root, v).op) catch { case _: Exception => None })
-        .contains(opTag)
-    }
-    if (replay) false
+    if (retainedSnapshots(root, 1 to cur).exists(_.op == opTag)) false
     else {
       val base = mainVersion(root)
       val snap = snapshot(root, base)
       val claim = cur + 1
-      val n = batch.count()
       val cols = evolvedCols(snap.cols, maxEverId(root, base), batch.schema)
       val files = stage(batch, root, claim, snap.statsCol, cols)
       val schema = if (snap.idBased) ddlOf(cols)
                    else mergedDdl(snap.schemaDdl, batch.schema)
-      commit(root, base, opTag, snap.nRows + n, schema, snap.statsCol,
-        snap.files ++ files, snap.deletes, cols, snap.eqDeletes,
-        claim = claim)
+      commit(root, base, opTag, snap.nRows + files.map(_.rows).sum, schema,
+        snap.statsCol, snap.files ++ files, snap.deletes, cols,
+        snap.eqDeletes, claim = claim)
       true
     }
   }
@@ -1709,22 +1704,8 @@ object SnapshotLake {
   def compact(spark: SparkSession, root: String,
               targetParts: Int = 1): (Int, Int, Int) = {
     val (prev, snap, claim) = mainMutationCtx(root)
-    val cur = open(spark, root, snap)
-    // a partitioned table compacts INTO its current spec — the rewrite
-    // that migrates pre-evolution eras: every compacted file gets a
-    // (specId, value) entry, so data that predated the spec (and could
-    // only fall through pruning) prunes exactly afterwards
-    val (files, pinfo) = snap.specs.find(_.id == snap.defaultSpec) match {
-      case Some(spec) =>
-        stagePartitioned(cur, root, claim, spec, snap.statsCol, snap.cols)
-      case None =>
-        val arranged = snap.statsCol match {
-          case Some(c) => cur.repartitionByRange(targetParts, col(c))
-          case None => cur.repartition(targetParts)
-        }
-        (stage(arranged, root, claim, snap.statsCol, snap.cols),
-          Map.empty[String, (Int, String)])
-    }
+    val (files, pinfo) =
+      restageCompacted(open(spark, root, snap), root, claim, snap, targetParts)
     val v = commit(root, prev, "compact", snap.nRows, snap.schemaDdl,
       snap.statsCol, files, Seq.empty, snap.cols, claim = claim,
       newPartInfo = pinfo)
@@ -1752,23 +1733,33 @@ object SnapshotLake {
       "binpack on a MOR table: rewrite position/equality deletes first")
     val (small, big) = snap.files.partition(_.rows < minRows)
     if (small.size <= 1) return (prev, small.size, 0)
-    val smallDf = openFiles(spark, root, snap, small)
-    val (packed, pinfo) = snap.specs.find(_.id == snap.defaultSpec) match {
-      case Some(spec) =>
-        stagePartitioned(smallDf, root, claim, spec, snap.statsCol, snap.cols)
-      case None =>
-        val arranged = snap.statsCol match {
-          case Some(c) => smallDf.repartitionByRange(targetParts, col(c))
-          case None => smallDf.repartition(targetParts)
-        }
-        (stage(arranged, root, claim, snap.statsCol, snap.cols),
-          Map.empty[String, (Int, String)])
-    }
+    val (packed, pinfo) = restageCompacted(openFiles(spark, root, snap, small),
+      root, claim, snap, targetParts)
     val v = commit(root, prev, s"binpack[<$minRows]", snap.nRows,
       snap.schemaDdl, snap.statsCol, big ++ packed, Seq.empty, snap.cols,
       claim = claim, newPartInfo = pinfo)
     (v, small.size, packed.size)
   }
+
+  /** Stage the rows a compaction rewrites. A partitioned table compacts
+    * INTO its current spec — the rewrite that migrates pre-evolution
+    * eras: every compacted file gets a (specId, value) entry, so data
+    * that predated the spec (and could only fall through pruning) prunes
+    * exactly afterwards. Otherwise rows range-arrange on the primary
+    * stats column into `targetParts` files with disjoint ranges. */
+  private def restageCompacted(df: DataFrame, root: String, claim: Int,
+                               snap: Snapshot, targetParts: Int)
+      : (Seq[FileEntry], Map[String, (Int, String)]) =
+    snap.specs.find(_.id == snap.defaultSpec) match {
+      case Some(spec) =>
+        stagePartitioned(df, root, claim, spec, snap.statsCol, snap.cols)
+      case None =>
+        val arranged = statsColsOf(snap.statsCol).headOption match {
+          case Some(c) => df.repartitionByRange(targetParts, col(c))
+          case None => df.repartition(targetParts)
+        }
+        (stage(arranged, root, claim, snap.statsCol, snap.cols), Map.empty)
+    }
 
   // ---- helpers -------------------------------------------------------------
 

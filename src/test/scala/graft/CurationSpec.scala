@@ -149,6 +149,29 @@ class CurationSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       s"score sum runs on $sumTypes — a double sum is merge-order-dependent")
   }
 
+  test("lm score: a NULL-text doc adds no terms to the corpus size") {
+    import spark.implicits._
+    def corpus(name: String, rows: Seq[(Long, String)]): String = {
+      val dir = java.nio.file.Paths.get("/tmp/graft-lm-null", name)
+      graft.sources.SnapshotLake.deleteRecursively(dir)
+      rows.toDF("doc_id", "text").coalesce(1)
+        .write.parquet(dir.resolve("documents.parquet").toString)
+      dir.toString
+    }
+    val docs = Seq((1L, "a b a c"), (2L, "b c d"), (3L, "a a e"))
+    val clean = corpus("clean", docs)
+    val withNull = corpus("with_null", docs :+ ((4L, null: String)))
+    // size(split(NULL)) is -1 without ANSI and NULL with it; both must
+    // count as the 0 terms the NULL doc explodes to
+    val key = "spark.sql.ansi.enabled"
+    val saved = spark.conf.get(key)
+    try Seq("false", "true").foreach { ansi =>
+      spark.conf.set(key, ansi)
+      assert(TextAnalysis.lmScore(spark, withNull).collect().toSeq ==
+        TextAnalysis.lmScore(spark, clean).collect().toSeq, s"ansi=$ansi")
+    } finally spark.conf.set(key, saved)
+  }
+
   test("stratified sample: min stratum kept whole; kept counts bounded and deterministic") {
     val rows = Curation.stratifiedSample(spark, sfDir).collect()
     val minDocs = rows.map(_.getAs[Long]("n_docs")).min
